@@ -31,8 +31,10 @@ def hourly_traffic(base_dir: str) -> MaterializationSpec:
         rows = raw.read_window(spark, w_start, w_end + 1).filter(
             (F.col("ts").cast("long") > w_start) & (F.col("ts").cast("long") <= w_end)
         )  # period-END grid timestamps: (start, end]
+        # label="end": the hour's closing sample (ts == w_end) stays in
+        # this window's bucket and partition, not the next hour's
         return time_rollup(rows, "entity_id", "ts", G_1H, TRENDS,
-                           bucket_col="bucket")
+                           bucket_col="bucket", label="end")
 
     return MaterializationSpec(
         name="traffic_1h", granularity=G_1H, target=target, src_fn=src_fn,

@@ -8,6 +8,11 @@ request compiles to ONE Catalyst plan: partition-pruned range scan →
 optional broadcast semi-join on the entity set → column pruning → order →
 keyset pagination.
 
+A page is ONE Spark job: the range scan (TrendStorePartStorage.read_window)
+hands Spark only the in-window partition directories, with the schema the
+writers recorded, so neither partition discovery nor schema inference
+adds a job of its own.
+
 Pagination is KEYSET (after-tuple), not offset: OFFSET n forces the
 executor to produce and discard n rows per page; the keyset predicate
 pushes straight into the scan range. Page stability follows from the

@@ -10,8 +10,12 @@ partition start):
 - **writes** use dynamic partition overwrite: a batch only rewrites the
   partitions its rows touch — the upsert unit, and the reason the
   keep-latest window in operators/upsert.py stays bounded at 100 TB.
-- **reads** prune partitions via p_bucket predicates (Catalyst partition
-  pruning, no file listing outside the range).
+- **reads** are directory-scoped: the driver lists the part's
+  ``p_bucket=`` directories and hands Spark only those in range (no file
+  listing outside it), with the data schema the writers recorded in
+  ``_part_meta.json`` (no schema-inference job). The p_bucket range
+  predicate stays on the frame, so the plan still shows it as Catalyst
+  PartitionFilters.
 - **retention** is a partition-directory drop, never a data rewrite.
 - every write appends to a modified-log (S5) — the signal the
   materialization engine's fingerprints consume.
@@ -19,13 +23,16 @@ partition start):
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 MODIFIED_LOG = "_modified_log"
 #: per-part metadata written alongside the data (underscore-prefixed, so
@@ -34,7 +41,44 @@ MODIFIED_LOG = "_modified_log"
 #: configured with the wrong partition_size_s would silently prune away
 #: existing partitions on range reads (r10 review). Writers record the
 #: grid here; readers open with ``TrendStorePartStorage.open`` to get it.
+#: Writers also record the union of the data columns they wrote (without
+#: p_bucket, whose type partition inference decides): reads pass it to
+#: Spark instead of inferring a schema, and a column one write added
+#: reads as NULL in the partitions written before it.
 PART_META = "_part_meta.json"
+
+
+def _read_meta(part_path: str) -> dict:
+    """The part's recorded metadata; {} for a part written before it
+    existed."""
+    p = os.path.join(part_path, PART_META)
+    if not os.path.exists(p):
+        return {}
+    with open(p) as fh:
+        return json.load(fh)
+
+
+def _union_schema(part: str, recorded: StructType,
+                  incoming: StructType) -> StructType:
+    """Recorded columns first, then incoming columns not yet recorded.
+    Names match case-insensitively, as Spark resolves them; a column
+    whose type differs from the recorded one is refused."""
+    fields = list(recorded.fields)
+    known = {f.name.lower(): f for f in fields}
+    for f in incoming.fields:
+        if f.name == "p_bucket":
+            continue
+        have = known.get(f.name.lower())
+        if have is None:
+            fields.append(StructField(f.name, f.dataType, True))
+            known[f.name.lower()] = fields[-1]
+        elif have.dataType != f.dataType:
+            raise ValueError(
+                f"part {part!r}: column {f.name!r} is recorded as "
+                f"{have.dataType.simpleString()}, this write has "
+                f"{f.dataType.simpleString()} — cast it upstream (write "
+                "rejected before any data landed)")
+    return StructType(fields)
 
 
 def bucket_of(ts_col: str, partition_size_s: int):
@@ -80,42 +124,48 @@ class TrendStorePartStorage:
         of guessing a size: read_window with a smaller-than-actual size
         computes a range floor ABOVE the real partition start and
         silently prunes away existing rows."""
-        import json
-
-        size = default_partition_size_s
-        p = os.path.join(base_dir, name, PART_META)
-        if os.path.exists(p):
-            with open(p) as fh:
-                size = int(json.load(fh)["partition_size_s"])
+        meta = _read_meta(os.path.join(base_dir, name))
+        size = int(meta.get("partition_size_s", default_partition_size_s))
         return cls(base_dir, name, partition_size_s=size, **kw)
 
-    def _ensure_meta(self) -> None:
-        """Record the partition grid with the data (atomic replace); a
-        writer configured with a DIFFERENT grid than the recorded one
-        would interleave misaligned partitions — refuse loudly."""
-        import json
-
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as fh:
-                recorded = int(json.load(fh)["partition_size_s"])
-            if recorded != self.partition_size_s:
-                raise ValueError(
-                    f"part {self.name!r} was written with "
-                    f"partition_size_s={recorded}; this handle says "
-                    f"{self.partition_size_s} — mixed grids corrupt range "
-                    "reads. Open the part with TrendStorePartStorage.open")
+    def _ensure_meta(self, spark: SparkSession, schema: StructType) -> None:
+        """Record the partition grid and the union of the data columns
+        with the data (atomic replace), before the data lands. A writer
+        configured with a DIFFERENT grid than the recorded one would
+        interleave misaligned partitions, and one that re-types a
+        recorded column would leave partitions no single schema reads —
+        refuse both loudly."""
+        meta = _read_meta(self.path)
+        recorded = int(meta.get("partition_size_s", self.partition_size_s))
+        if recorded != self.partition_size_s:
+            raise ValueError(
+                f"part {self.name!r} was written with "
+                f"partition_size_s={recorded}; this handle says "
+                f"{self.partition_size_s} — mixed grids corrupt range "
+                "reads. Open the part with TrendStorePartStorage.open")
+        if "schema" in meta:
+            known = StructType.fromJson(meta["schema"])
+        elif os.path.isdir(self.path) and next(_int_bucket_dirs(self.path), None):
+            # written before schemas were recorded: start from the
+            # schema reads inferred until now
+            known = _union_schema(self.name, StructType(),
+                                  spark.read.parquet(self.path).schema)
+        else:
+            known = StructType()
+        new = {"partition_size_s": self.partition_size_s,
+               "schema": _union_schema(self.name, known, schema).jsonValue()}
+        if new == meta:
             return
         os.makedirs(self.path, exist_ok=True)
         tmp = self.meta_path + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({"partition_size_s": self.partition_size_s}, fh)
+            json.dump(new, fh)
         os.replace(tmp, self.meta_path)
 
     def write(self, df: DataFrame, ts_col: str = "ts", job_id: int | None = None) -> list[int]:
         """Dynamic-partition-overwrite write; returns touched p_buckets and
         appends them to the modified log."""
         spark = df.sparkSession
-        self._ensure_meta()
         out = df.withColumn("p_bucket", bucket_of(ts_col, self.partition_size_s))
         # bounded-by: distinct partition buckets of ONE batch (≤ batch span / partition_size)
         # (column-pruned pass: only p_bucket's source column is read)
@@ -130,6 +180,7 @@ class TrendStorePartStorage:
                 f"part {self.name!r}: {ts_col} contains NULLs — rows "
                 "without a timestamp have no partition; filter or repair "
                 "them upstream (write rejected before any data landed)")
+        self._ensure_meta(spark, out.schema)
         # co-locate each bucket's rows before partitionBy: without this,
         # every input task opens a writer per bucket it sees — T input
         # tasks × B buckets small files, and a single-file source writes
@@ -178,7 +229,7 @@ class TrendStorePartStorage:
         """S4: transfer_staged semantics — merge staged rows into the
         partitions they touch, last-write-wins per key.
 
-        Reads ONLY the touched partitions (partition-pruned), merges via
+        Reads ONLY the touched partition directories, merges via
         the keep-latest window, localCheckpoints to cut lineage (Spark
         cannot overwrite a path it is still reading), then dynamic-
         overwrites those partitions. Work ∝ staged data + touched
@@ -195,25 +246,52 @@ class TrendStorePartStorage:
         if os.path.isdir(self.path) and any(
             e.startswith("p_bucket=") for e in os.listdir(self.path)
         ):
-            existing = (
-                self.read(spark)
-                .filter(F.col("p_bucket").isin(touched))
-                .drop("p_bucket")
-            )
+            existing = self._read_partitions(
+                spark, set(touched).__contains__,
+                F.col("p_bucket").isin(touched)).drop("p_bucket")
         merged = upsert_latest(existing, staged, keys=keys, version_cols=version_cols)
         merged = merged.localCheckpoint(eager=True)
         return self.write(merged, ts_col=ts_col, job_id=job_id)
 
+    def _reader(self, spark: SparkSession):
+        """A parquet reader carrying the recorded data schema; a part
+        written before schemas were recorded is inferred as before."""
+        reader = spark.read
+        schema = _read_meta(self.path).get("schema")
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader
+
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return self._reader(spark).parquet(self.path)
+
+    def _read_partitions(self, spark: SparkSession, keep: Callable[[int], bool],
+                         where: Column) -> DataFrame:
+        """THE partition-scoped read: Spark gets only the p_bucket
+        directories whose bucket passes `keep` (listed on the driver, so
+        no Spark listing job over the whole part) and the recorded schema
+        (so no inference job) — one job for the caller's action.
+        `where` must select the same buckets: it stays on the frame as
+        the PartitionFilters the plan shows. An empty selection still
+        hands Spark one directory (it refuses zero paths), which `where`
+        prunes: same columns and types as a non-empty read."""
+        listed = list(_int_bucket_dirs(self.path)) if os.path.isdir(self.path) else []
+        if not listed:
+            return self.read(spark).filter(where)
+        dirs = [e for b, e in listed if keep(b)] or [listed[0][1]]
+        return (self._reader(spark).option("basePath", self.path)
+                .parquet(*[os.path.join(self.path, e) for e in dirs])
+                .filter(where))
 
     def read_window(self, spark: SparkSession, start_epoch: int, end_epoch: int) -> DataFrame:
-        """Partition-pruned range read: the p_bucket predicate prunes whole
-        directories before any file IO (verify via explain: PartitionFilters)."""
+        """Range read over the partitions [floor(start), end): reads only
+        those directories, with the schema in _part_meta.json. The
+        p_bucket range predicate is kept, so explain shows it as
+        PartitionFilters."""
         lo = (start_epoch // self.partition_size_s) * self.partition_size_s
-        return self.read(spark).filter(
-            (F.col("p_bucket") >= lo) & (F.col("p_bucket") < end_epoch)
-        )
+        return self._read_partitions(
+            spark, lambda b: lo <= b < end_epoch,
+            (F.col("p_bucket") >= lo) & (F.col("p_bucket") < end_epoch))
 
     def modified_log(self, spark: SparkSession) -> DataFrame | None:
         if not os.path.isdir(self.modified_log_path):
@@ -258,8 +336,8 @@ def compact_partitions(storage: TrendStorePartStorage, spark: SparkSession,
     ONE job for the whole store (r8; the per-directory loop it replaces
     ran one sequential Spark job per partition — a day-partitioned year
     is 365 serial rewrites): list the directories needing work
-    driver-side (bounded by partition count), partition-prune a single
-    read to exactly those buckets, co-locate each bucket's rows on one
+    driver-side (bounded by partition count), read exactly those
+    directories (the partition-scoped read), co-locate each bucket's rows on one
     task, dynamic-overwrite them in one write. Untouched partitions are
     never read or rewritten; lineage is cut before the overwrite (Spark
     cannot overwrite a path it is still reading). Returns partitions
@@ -274,8 +352,8 @@ def compact_partitions(storage: TrendStorePartStorage, spark: SparkSession,
             need.append(b)
     if not need:
         return 0
-    df = storage.read(spark).filter(
-        F.col("p_bucket").isin(need))  # partition-pruned read
+    df = storage._read_partitions(spark, set(need).__contains__,
+                                  F.col("p_bucket").isin(need))
     n_parts = len(need) * target_files_per_partition
     if target_files_per_partition > 1:
         cols = [c for c in df.columns if c != "p_bucket"]

@@ -219,3 +219,48 @@ def test_partition_tiling_guard(spark, stores):
     spec = make_spec(raw, bad_target)
     with pytest.raises(ValueError, match="tile"):
         engine.run_window(spark, spec, 0, "fp")
+
+
+def test_example_hourly_ladder_labels_period_end(spark, tmp_path):
+    """examples/pm_instance hourly_traffic rolls period-END quarter
+    samples: an hour (h, h+1h] sums all 4 of its samples, and re-ticking
+    hour h after a late correction leaves hour h+1's row unchanged."""
+    import dataclasses
+
+    from examples.pm_instance.specs import hourly_traffic
+
+    h0 = 1704067200
+    # far-future `now` with a horizon to match, as in the tests above
+    spec = dataclasses.replace(hourly_traffic(str(tmp_path)),
+                               reprocessing_period_s=10**12)
+    raw = spec.sources[0]
+    engine = MaterializationEngine(str(tmp_path))
+
+    def load(rows):
+        raw.upsert(spark.createDataFrame(
+            rows, "entity_id long, epoch long, calls int, drops int, job_id long",
+        ).select("entity_id", F.timestamp_seconds("epoch").alias("ts"),
+                 "calls", "drops", "job_id"),
+            keys=["entity_id", "ts"], version_cols=["job_id"], ts_col="ts")
+
+    # two hours of quarter samples per cell; sample q of hour k carries
+    # calls 10**q (k == 0) or 2 * 10**q (k == 1) so every sum is distinct
+    load([(e, h0 + 3600 * k + 900 * (q + 1), (k + 1) * 10 ** q, 0, 1)
+          for e in (1, 2) for k in (0, 1) for q in range(4)])
+    now = 4e9
+    engine.tick(spark, spec, now=now)
+
+    def hourly():
+        return {(r["entity_id"], r["bucket"]): r["calls"]
+                for r in spec.target.read(spark).collect()}
+
+    first = hourly()
+    assert first == {(e, h0 + 3600 * (k + 1)): (k + 1) * 1111
+                     for e in (1, 2) for k in (0, 1)}
+
+    load([(1, h0 + 1800, 50, 0, 2)])  # late correction inside hour 0
+    assert h0 in engine.tick(spark, spec, now=now)
+    second = hourly()
+    assert second[(1, h0 + 3600)] == 1111 - 10 + 50
+    assert {k: v for k, v in second.items() if k != (1, h0 + 3600)} == \
+        {k: v for k, v in first.items() if k != (1, h0 + 3600)}

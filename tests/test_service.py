@@ -311,3 +311,51 @@ def test_every_page_plan_is_partition_pruned(spark, tmp_path):
             break
     assert n_pages > 2 and n_rows == 36
     assert sum(len(p) for p in page_through(spark, q)) == 36
+
+
+def _page_jobs(spark, q):
+    """(rows, Spark jobs run) for one page's collect."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"page-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = q.run(spark).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_page_runs_one_spark_job(spark, tmp_path):
+    """A page reads only its in-window partition directories with the
+    recorded schema: past Spark's 32-path parallel-listing threshold
+    neither partition discovery nor schema inference adds a job. A part
+    without a recorded schema (written before schemas were recorded)
+    reads the same rows, paying only the inference job."""
+    import json
+    import os
+
+    st = TrendStorePartStorage(str(tmp_path), "jobs", partition_size_s=3600)
+    st.write(spark.range(33).select(
+        F.col("id").alias("entity_id"),
+        F.timestamp_seconds(H0 + 3600 * F.col("id")).alias("ts"),
+        F.col("id").cast("double").alias("v"),
+    ), ts_col="ts")
+    assert sum(e.startswith("p_bucket=") for e in os.listdir(st.path)) == 33
+    q = TrendQuery(part=st, start_epoch=H0 + 3600 * 10,
+                   end_epoch=H0 + 3600 * 16, columns=["v"])
+    rows, jobs = _page_jobs(spark, q)
+    assert [r["entity_id"] for r in rows] == list(range(10, 16))
+    assert jobs == 1
+
+    with open(st.meta_path) as fh:
+        meta = json.load(fh)
+    del meta["schema"]
+    with open(st.meta_path, "w") as fh:
+        json.dump(meta, fh)
+    legacy_rows, legacy_jobs = _page_jobs(spark, q)
+    assert legacy_rows == rows
+    assert legacy_jobs <= 2

@@ -189,6 +189,70 @@ def test_write_files_per_partition_fans_out(spark, tmp_path):
     assert spark.read.parquet(st.path).count() == 64
 
 
+def _meta(st):
+    import json
+
+    with open(st.meta_path) as fh:
+        return json.load(fh)
+
+
+def test_write_records_added_column_and_reads_it_as_null(spark, tmp_path):
+    st = TrendStorePartStorage(str(tmp_path), "part_s", partition_size_s=3600)
+    st.write(_mini(spark, [(1, "2024-01-01 00:10:00", 1, 1.0)]), ts_col="ts")
+    assert [f["name"] for f in _meta(st)["schema"]["fields"]] == [
+        "entity_id", "ts", "job_id", "v"]
+    st.write(_mini(spark, [(1, "2024-01-01 01:10:00", 2, 2.0)])
+             .withColumn("w", F.lit(7).cast("int")), ts_col="ts")
+    fields = _meta(st)["schema"]["fields"]
+    assert [f["name"] for f in fields] == ["entity_id", "ts", "job_id", "v", "w"]
+    assert fields[-1]["type"] == "integer"
+    got = st.read_window(spark, 1704067200, 1704074400)
+    assert {r["v"]: r["w"] for r in got.collect()} == {1.0: None, 2.0: 7}
+
+
+def test_write_refuses_a_retyped_column_before_data_lands(spark, tmp_path):
+    import pytest
+
+    st = TrendStorePartStorage(str(tmp_path), "part_t", partition_size_s=3600)
+    st.write(_mini(spark, [(1, "2024-01-01 00:10:00", 1, 1.0)]), ts_col="ts")
+    before = _meta(st)
+    retyped = _mini(spark, [(1, "2024-01-01 05:10:00", 2, 2.0)]) \
+        .withColumn("v", F.col("v").cast("string"))
+    with pytest.raises(ValueError, match="'v' is recorded as double"):
+        st.write(retyped, ts_col="ts")
+    assert sorted(e for e in os.listdir(st.path) if e.startswith("p_bucket=")) \
+        == ["p_bucket=1704067200"]
+    assert _meta(st) == before
+
+
+def test_empty_window_has_the_schema_of_a_full_one(spark, tmp_path):
+    st = TrendStorePartStorage(str(tmp_path), "part_w", partition_size_s=3600)
+    st.write(_mini(spark, [(1, "2024-01-01 00:10:00", 1, 1.0),
+                           (1, "2024-01-01 01:10:00", 1, 2.0)]), ts_col="ts")
+    full = st.read_window(spark, 1704067200, 1704074400)
+    empty = st.read_window(spark, 1704153600, 1704157200)  # a day later
+    assert empty.count() == 0 and full.count() == 2
+    assert empty.schema == full.schema
+    assert dict(empty.dtypes)["p_bucket"] == "int"
+
+
+def test_write_to_a_part_without_recorded_schema_keeps_its_columns(spark, tmp_path):
+    """A part whose meta predates recorded schemas: the next write records
+    the columns reads inferred until then, plus its own."""
+    import json
+
+    st = TrendStorePartStorage(str(tmp_path), "part_l", partition_size_s=3600)
+    st.write(_mini(spark, [(1, "2024-01-01 00:10:00", 1, 1.0)]), ts_col="ts")
+    with open(st.meta_path, "w") as fh:
+        json.dump({"partition_size_s": 3600}, fh)
+    st.write(_mini(spark, [(1, "2024-01-01 01:10:00", 2, 2.0)])
+             .select("entity_id", "ts", "job_id"), ts_col="ts")
+    assert [f["name"] for f in _meta(st)["schema"]["fields"]] == [
+        "entity_id", "ts", "job_id", "v"]
+    got = st.read_window(spark, 1704067200, 1704074400)
+    assert {r["job_id"]: r["v"] for r in got.collect()} == {1: 1.0, 2: None}
+
+
 def test_jsonl_harvest_equals_csv_harvest(spark, tmp_path):
     """S1 sibling format: a JSON-lines drop of the same vendor rows must
     resolve/align identically to the CSV path (format equivalence), and a
