@@ -75,6 +75,7 @@ def cmd_load_data(args) -> int:
             .withColumn("ts", F.to_timestamp("ts"))
         )
     entities_store = f"{args.base_dir}/_entities"
+    entity_schema = "entity_id long, name string"
     # explicit existence check, NOT try/except: a bare except here turned
     # a corrupt footer / permission error into "empty directory", minting
     # fresh hash ids for every DN and silently splitting entity history
@@ -82,12 +83,21 @@ def cmd_load_data(args) -> int:
     if os.path.isdir(entities_store) and any(
         not e.startswith("_") for e in os.listdir(entities_store)
     ):
-        entities = spark.read.parquet(entities_store)
+        entities = spark.read.schema(entity_schema).parquet(entities_store)
     else:
-        entities = spark.createDataFrame([], schema="entity_id long, name string")
+        entities = spark.createDataFrame([], schema=entity_schema)
     resolved, new_ents = resolve_entities(pkg, entities, dn_col=args.dn_col)
-    # appending an empty frame is a no-op; no count() pre-check job needed
-    new_ents.write.mode("append").parquet(entities_store)
+    # bounded-by: the package's unseen DNs; a load of known cells adds no file
+    minted = new_ents.collect()
+    if minted:
+        import pyarrow as pa
+
+        from minerva_etl_46_spark.sources.paio import append_table
+
+        append_table(entities_store, pa.table({
+            "entity_id": pa.array([r[0] for r in minted], pa.int64()),
+            "name": pa.array([r[1] for r in minted], pa.string()),
+        }))
     resolved = resolved.withColumn("raw_ts", F.col(args.ts_col))
     aligned = align_package(resolved, args.ts_col, GRANULARITIES[args.granularity])
     value_cols = [c for c in aligned.columns

@@ -14,20 +14,24 @@ Re-implements the reference's materialization daemon semantics
     reprocess    = late data changes the fingerprint → window re-runs, but
                    only within `reprocessing_period` of the window end
 
-Spark mapping: each tick is a bounded batch job per dirty window; the write
-overwrites exactly the target partitions the window covers. State and
-modified-log are tiny bookkeeping Parquet datasets (driver-side pandas —
-scheduling metadata, never fact data; at 1000-executor scale this remains
-kilobytes per part).
+Spark mapping: a tick runs its dirty windows as passes of at most
+``PASS_WINDOWS``. A pass unions every window's pipeline output, tagged with
+its window start, checkpoints it once, collects the distinct (window,
+partition) pairs once, and overwrites exactly the target partitions those
+windows reach in ONE dynamic-partition write; ``run_window`` is the pass of
+one window. State and modified-log are tiny bookkeeping Parquet datasets
+read and written on the driver (pandas / pyarrow — scheduling metadata,
+never fact data; at 1000-executor scale this remains kilobytes per part),
+so finding the candidates runs no Spark job.
 
 The same loop runs under Structured Streaming `availableNow` by pointing
 `foreachBatch` at `run_window` — the builders are identical (SURVEY §2.9).
 
 Crash/concurrency contract (r14, pinned by tests/test_r14_materialize_crash.py):
 
-- **Crash-converge.** The state fingerprint is saved AFTER the target write
-  (staged rename), so a kill anywhere inside ``run_window`` leaves the OLD
-  fingerprint on disk and the next ``tick`` re-runs the window; for a
+- **Crash-converge.** A pass saves its fingerprints AFTER the target write
+  (staged rename), so a kill anywhere inside a pass leaves the OLD
+  fingerprints on disk and the next ``tick`` re-runs its windows; for a
   deterministic ``src_fn`` the dynamic-partition overwrite makes the replay
   idempotent. Stale-partition deletes are LOGGED BEFORE they are executed
   (log-ahead): a kill mid-delete can lose the rmtree but never the
@@ -56,11 +60,13 @@ from __future__ import annotations
 import fcntl
 import hashlib
 import os
+import shutil
 import time
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
+from functools import reduce
 from zoneinfo import ZoneInfo
 
 import pandas as pd
@@ -68,9 +74,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minerva_etl_46_spark.functions.timestamps import Granularity
-from minerva_etl_46_spark.sources.trendstore import TrendStorePartStorage
+from minerva_etl_46_spark.sources.trendstore import TrendStorePartStorage, bucket_of
 
 STATE_DIR = "_materialization_state"
+#: windows per materialization pass: bounds the union's plan depth and
+#: the checkpoint's size on a backfill; the state is saved after each pass
+PASS_WINDOWS = 24
+#: the window-start tag a pass adds to each window's rows
+_WINDOW_COL = "__window_start"
 
 
 def _cal_floor(epoch: int, unit: str, tz: str) -> int:
@@ -86,7 +97,7 @@ def _cal_floor(epoch: int, unit: str, tz: str) -> int:
     Europe/Amsterdam whose transitions happen at 02:00/03:00 — but a zone
     whose transition crosses midnight (e.g. America/Santiago, 24:00→23:00)
     can disagree and break the driver-mirror invariant. Such zones are out
-    of scope for calendar materialization; run_window's tiling check
+    of scope for calendar materialization; the pass's tiling check
     catches the resulting off-grid boundaries loudly."""
     zone = ZoneInfo(tz)
     local = datetime.fromtimestamp(epoch, zone)
@@ -237,24 +248,17 @@ class MaterializationEngine:
 
     def candidates(self, spark: SparkSession, spec: MaterializationSpec,
                    now: float | None = None) -> list[tuple[int, str]]:
-        """(window_start, fingerprint) pairs that need (re)processing."""
+        """(window_start, fingerprint) pairs that need (re)processing.
+        Reads the sources' modified logs on the driver: no Spark job."""
         now = time.time() if now is None else now
         # gather modified windows + per-window source digests
         win_info: dict[int, list[str]] = {}
         win_last_mod: dict[int, float] = {}
         for src in spec.sources:
-            log = src.modified_log(spark)
-            if log is None:
-                continue
-            rows = (
-                log.groupBy("p_bucket")
-                .agg(F.max("modified_at").alias("m"), F.count(F.lit(1)).alias("n"))
-                .collect()  # bounded-by: touched buckets within the retention window
-            )
-            for r in rows:
-                for w in self._window_of_bucket(spec, r["p_bucket"], src.partition_size_s):
-                    win_info.setdefault(w, []).append(f"{src.name}:{r['p_bucket']}:{r['n']}:{r['m']}")
-                    win_last_mod[w] = max(win_last_mod.get(w, 0.0), r["m"])
+            for b, n, m in src.modified_buckets():
+                for w in self._window_of_bucket(spec, b, src.partition_size_s):
+                    win_info.setdefault(w, []).append(f"{src.name}:{b}:{n}:{m}")
+                    win_last_mod[w] = max(win_last_mod.get(w, 0.0), m)
         state = self.load_state(spec).set_index("window_start")
         out: list[tuple[int, str]] = []
         for w, parts in sorted(win_info.items()):
@@ -277,11 +281,8 @@ class MaterializationEngine:
 
     # ---- execution ----
 
-    def run_window(self, spark: SparkSession, spec: MaterializationSpec,
-                   window_start: int, fingerprint: str, now: float | None = None) -> int:
-        """Materialize one window: run the registered pipeline, overwrite
-        the target's partitions for that window, record the fingerprint."""
-        w_end = self._window_end(spec, window_start)
+    def _check_tiling(self, spec: MaterializationSpec, window_start: int,
+                      w_end: int) -> None:
         # Dynamic partition overwrite replaces WHOLE partitions: the target's
         # partition size must tile the window exactly, or this write would
         # clobber sibling windows sharing a partition (the reference instead
@@ -303,17 +304,33 @@ class MaterializationEngine:
                 f"materialization {spec.name}: target partition_size_s={ps} "
                 f"must evenly tile the {g}s granularity window"
             )
-        # checkpoint before write: TrendStorePartStorage.write runs TWO
-        # actions (touched-bucket collect, then the parquet write) — an
-        # un-checkpointed rollup would execute its whole pipeline twice
-        # per window on the materialization hot path (r10 review; the
-        # upsert path already checkpoints for the same reason, plus it
-        # pins the touched-list/written-data consistency for any
-        # nondeterministic source)
-        df = spec.src_fn(spark, window_start, w_end).localCheckpoint(eager=True)
-        state = self.load_state(spec)
-        prev = state[state["window_start"] == window_start]
-        touched = set(spec.target.write(df, ts_col=spec.ts_col))
+
+    def _run_pass(self, spark: SparkSession, spec: MaterializationSpec,
+                  windows: list[tuple[int, str]], now: float | None) -> None:
+        """Materialize ``windows`` ((window_start, fingerprint) pairs) in
+        one pass: every window's pipeline output, tagged with its window
+        start, in one checkpoint and one target write; then the stale
+        partition deletes and one state save."""
+        ends = {w: self._window_end(spec, w) for w, _ in windows}
+        for w, w_end in ends.items():
+            self._check_tiling(spec, w, w_end)
+        frames = [spec.src_fn(spark, w, w_end)
+                  .withColumn(_WINDOW_COL, F.lit(w).cast("long"))
+                  for w, w_end in ends.items()]
+        # checkpoint before the two actions below (pair collect, write):
+        # an un-checkpointed rollup would run its whole pipeline twice,
+        # and it pins the partitions list / written data consistency for
+        # any nondeterministic source
+        df = reduce(DataFrame.unionByName, frames).localCheckpoint(eager=True)
+        by_window: dict[int, set[int]] = {w: set() for w in ends}
+        # bounded-by: the pass's windows × the partitions each one reaches
+        for w, b in df.select(_WINDOW_COL, bucket_of(
+                spec.ts_col, spec.target.partition_size_s)).distinct().collect():
+            by_window[w].add(b)
+        written = set().union(*by_window.values())
+        # a None bucket (NULL timestamp) makes write refuse before any data lands
+        spec.target.write(df.drop(_WINDOW_COL), ts_col=spec.ts_col,
+                          touched=list(written))
         # Dynamic partition overwrite cannot DELETE: a reprocess whose new
         # output no longer reaches some partition it previously wrote
         # (late corrections moved/removed all its rows — or the whole
@@ -324,51 +341,49 @@ class MaterializationEngine:
         # partitions THIS window's previous run recorded in the state —
         # convention-agnostic (output labels may sit at period END, i.e.
         # outside [window_start, w_end) on the partition grid, so a
-        # grid-derived range would delete a NEIGHBOR window's output)
-        # (r10 review + the ladder regression that fix caught).
-        import shutil
-
-        prev_parts: list[int] = []
-        if len(prev) and pd.notna(prev["partitions"].iloc[0]):
-            prev_parts = [int(x) for x in
-                          str(prev["partitions"].iloc[0]).split(",") if x]
-        to_remove = []
-        for b in prev_parts:
-            if b in touched:
-                continue
-            pdir = os.path.join(spec.target.path, f"p_bucket={b}")
-            if os.path.isdir(pdir):
-                to_remove.append(b)
+        # grid-derived range would delete a NEIGHBOR window's output) —
+        # and never a partition this pass just wrote for a sibling window.
+        state = self.load_state(spec)
+        in_pass = state["window_start"].isin(list(ends))
+        prev_parts = {int(b) for parts in state.loc[in_pass, "partitions"].dropna()
+                      for b in str(parts).split(",") if b}
+        to_remove = [b for b in sorted(prev_parts - written) if os.path.isdir(
+            os.path.join(spec.target.path, f"p_bucket={b}"))]
         if to_remove:
             # a delete is a modification: downstream materializations
             # chained off this target must see these buckets dirty.
-            # LOG-AHEAD (r14): the log entry lands BEFORE the rmtree —
-            # a kill mid-delete can lose the rmtree (the replay finishes
-            # it: fingerprint unsaved ⇒ window re-runs) but never the
-            # dirty mark. The old order logged only AFTER the whole
-            # loop, so a crash between rmtree and log silently lost the
-            # deletion for every chained materialization, forever. A
-            # crash between log and rmtree just re-logs on replay —
-            # at-least-once, idempotent downstream.
+            # LOG-AHEAD: the log entry lands BEFORE the rmtree — a kill
+            # mid-delete can lose the rmtree (the replay finishes it:
+            # fingerprints unsaved ⇒ the windows re-run) but never the
+            # dirty mark. A crash between log and rmtree just re-logs on
+            # replay — at-least-once, idempotent downstream.
             spec.target._log_modified(spark, to_remove, job_id=None)
         for b in to_remove:
             shutil.rmtree(os.path.join(spec.target.path, f"p_bucket={b}"))
-        state = state[state["window_start"] != window_start]
+        processed_at = time.time() if now is None else now
         state = pd.concat([
-            state,
+            state[~in_pass],
             pd.DataFrame([{
-                "window_start": window_start,
-                "fingerprint": fingerprint,
-                "processed_at": time.time() if now is None else now,
-                "partitions": ",".join(str(b) for b in sorted(touched)),
-            }]),
+                "window_start": w,
+                "fingerprint": fp,
+                "processed_at": processed_at,
+                "partitions": ",".join(str(b) for b in sorted(by_window[w])),
+            } for w, fp in windows]),
         ], ignore_index=True)
         self._save_state(spec, state)
+
+    def run_window(self, spark: SparkSession, spec: MaterializationSpec,
+                   window_start: int, fingerprint: str, now: float | None = None) -> int:
+        """Materialize one window: run the registered pipeline, overwrite
+        the target's partitions for that window, record the fingerprint —
+        a pass of one window."""
+        self._run_pass(spark, spec, [(window_start, fingerprint)], now)
         return window_start
 
     def tick(self, spark: SparkSession, spec: MaterializationSpec,
              now: float | None = None) -> list[int]:
-        """One daemon iteration: process every dirty window. Returns the
+        """One daemon iteration: process every dirty window, in passes of
+        at most ``PASS_WINDOWS``, saving the state after each. Returns the
         windows materialized.
 
         Holds the per-spec flock for the whole iteration (candidates are
@@ -376,8 +391,7 @@ class MaterializationEngine:
         the state the first tick saved, sees matching fingerprints, and
         quiesces — each dirty window runs exactly once across both."""
         with self._spec_lock(spec):
-            done = []
-            for w, fp in self.candidates(spark, spec, now=now):
-                self.run_window(spark, spec, w, fp, now=now)
-                done.append(w)
-            return done
+            todo = self.candidates(spark, spec, now=now)
+            for i in range(0, len(todo), PASS_WINDOWS):
+                self._run_pass(spark, spec, todo[i:i + PASS_WINDOWS], now)
+            return [w for w, _ in todo]

@@ -4,7 +4,10 @@ UNVERIFIED [M]]).
 
 Pipeline: parse (schema-declared CSV, no inference) → resolve entity DNs to
 ids → align timestamps to the granularity grid → upsert into the trend
-store. One Spark job; entity dimension is broadcast (shuffle-free).
+store. The entity dimension is broadcast (shuffle-free). A load is several
+Spark jobs, not one: `load-data` collects the package's unseen entities,
+then the upsert collects its touched buckets, checkpoints the keep-latest
+merge and writes it (Spark may split an action into more than one job).
 
 Create-on-miss ids: the reference assigns serial ids from a PG sequence; a
 distributed engine can't serialize id assignment through one counter, so

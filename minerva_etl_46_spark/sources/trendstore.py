@@ -162,14 +162,21 @@ class TrendStorePartStorage:
             json.dump(new, fh)
         os.replace(tmp, self.meta_path)
 
-    def write(self, df: DataFrame, ts_col: str = "ts", job_id: int | None = None) -> list[int]:
+    def write(self, df: DataFrame, ts_col: str = "ts", job_id: int | None = None,
+              touched: list[int | None] | None = None) -> list[int]:
         """Dynamic-partition-overwrite write; returns touched p_buckets and
-        appends them to the modified log."""
+        appends them to the modified log.
+
+        ``touched``: the distinct p_buckets of ``df``'s rows
+        (``bucket_of(ts_col)``, None for a NULL timestamp) from a caller
+        that has already collected them. It must cover every bucket
+        ``df`` reaches; a listed bucket without rows is logged, not
+        rewritten. Left out, one column-pruned job collects them here."""
         spark = df.sparkSession
         out = df.withColumn("p_bucket", bucket_of(ts_col, self.partition_size_s))
-        # bounded-by: distinct partition buckets of ONE batch (≤ batch span / partition_size)
-        # (column-pruned pass: only p_bucket's source column is read)
-        touched = [r[0] for r in out.select("p_bucket").distinct().collect()]
+        if touched is None:
+            # bounded-by: distinct partition buckets of ONE batch (≤ batch span / partition_size)
+            touched = [r[0] for r in out.select("p_bucket").distinct().collect()]
         if any(b is None for b in touched):
             # a NULL timestamp has no partition: letting it through writes
             # a __HIVE_DEFAULT_PARTITION__ directory the time-grid
@@ -210,19 +217,40 @@ class TrendStorePartStorage:
     def _log_modified(self, spark: SparkSession, buckets: list[int], job_id: int | None) -> None:
         # Driver-side bookkeeping append (bounded by touched buckets —
         # already a driver-side list); see sources/paio.py for why this
-        # bypasses spark.createDataFrame. Schema matches the Spark
-        # reader exactly (string/int64/double/nullable-int64).
+        # bypasses spark.createDataFrame.
         import pyarrow as pa
 
         from minerva_etl_46_spark.sources.paio import append_table
 
         now = time.time()
-        append_table(self.modified_log_path, pa.table({
-            "part": pa.array([self.name] * len(buckets), pa.string()),
-            "p_bucket": pa.array([int(b) for b in buckets], pa.int64()),
-            "modified_at": pa.array([now] * len(buckets), pa.float64()),
-            "job_id": pa.array([job_id] * len(buckets), pa.int64()),
-        }))
+        append_table(self.modified_log_path, pa.Table.from_pydict({
+            "part": [self.name] * len(buckets),
+            "p_bucket": [int(b) for b in buckets],
+            "modified_at": [now] * len(buckets),
+            "job_id": [job_id] * len(buckets),
+        }, schema=_log_schema()))
+
+    def modified_buckets(self) -> list[tuple[int, int, float]]:
+        """(p_bucket, log entries, latest modified_at) per bucket in the
+        modified log, read on the driver: the log is bookkeeping bounded
+        by the buckets written within retention, so the materialization
+        engine's candidate scan runs no Spark job. Same rows as a
+        ``groupBy("p_bucket")`` over ``modified_log(spark)``."""
+        if not os.path.isdir(self.modified_log_path):
+            return []
+        import pyarrow.dataset as ds
+
+        # the fixed schema: no inference, and a log directory holding no
+        # file yet reads as empty; dot- and underscore-prefixed entries
+        # (paio's staged .tmp files) are skipped, as Spark skips them
+        log = ds.dataset(self.modified_log_path, schema=_log_schema(),
+                         format="parquet").to_table(
+                             columns=["p_bucket", "modified_at"])
+        grouped = log.group_by("p_bucket").aggregate(
+            [("modified_at", "max"), ([], "count_all")])
+        return list(zip(grouped["p_bucket"].to_pylist(),
+                        grouped["count_all"].to_pylist(),
+                        grouped["modified_at_max"].to_pylist()))
 
     def upsert(self, staged: DataFrame, keys: list[str], version_cols: list[str],
                ts_col: str = "ts", job_id: int | None = None) -> list[int]:
@@ -251,7 +279,9 @@ class TrendStorePartStorage:
                 F.col("p_bucket").isin(touched)).drop("p_bucket")
         merged = upsert_latest(existing, staged, keys=keys, version_cols=version_cols)
         merged = merged.localCheckpoint(eager=True)
-        return self.write(merged, ts_col=ts_col, job_id=job_id)
+        # keep-latest leaves rows only in staged's buckets (existing rows
+        # are read from those alone), so staged's buckets cover merged's
+        return self.write(merged, ts_col=ts_col, job_id=job_id, touched=touched)
 
     def _reader(self, spark: SparkSession):
         """A parquet reader carrying the recorded data schema; a part
@@ -309,6 +339,15 @@ class TrendStorePartStorage:
                 shutil.rmtree(os.path.join(self.path, entry))
                 dropped.append(b)
         return sorted(dropped)
+
+
+def _log_schema():
+    """The modified log's columns: ``_log_modified`` writes them,
+    ``modified_buckets`` reads them without inference."""
+    import pyarrow as pa
+
+    return pa.schema([("part", pa.string()), ("p_bucket", pa.int64()),
+                      ("modified_at", pa.float64()), ("job_id", pa.int64())])
 
 
 def _int_bucket_dirs(path: str):

@@ -55,6 +55,36 @@ def test_cli_load_data_csv_and_retention(spark, tmp_path, capsys):
     assert left == []
 
 
+def test_load_data_of_known_cells_adds_no_entity_file(spark, tmp_path):
+    """Only a load that meets unseen DNs appends to _entities: two loads
+    of the same 20 cells leave one data file, and the same ids."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    csv = tmp_path / "pm.csv"
+    csv.write_text("dn,ts,calls\n" + "".join(
+        f'"Net=1,Cell={c}",2024-01-01 00:03:00,{c}\n' for c in range(20)))
+    args = ["load-data", str(csv), "--schema", "dn string, ts timestamp, calls int",
+            "--base-dir", str(tmp_path), "--part", "traffic",
+            "--granularity", "15m"]
+    ents = tmp_path / "_entities"
+
+    def entities():
+        files = sorted(e for e in os.listdir(ents) if not e.startswith((".", "_")))
+        return files, sorted((r["name"], r["entity_id"])
+                             for r in pq.read_table(ents).to_pylist())
+
+    assert main(args) == 0
+    files, ids = entities()
+    assert len(files) == 1 and len(ids) == 20
+    assert main(args) == 0
+    assert entities() == (files, ids)
+    stored = TrendStorePartStorage(str(tmp_path), "traffic").read(spark)
+    assert sorted(r[0] for r in stored.select("entity_id").distinct().collect()) \
+        == sorted(i for _, i in ids)
+
+
 def test_cli_load_data_xml(spark, tmp_path, capsys):
     x = tmp_path / "meas.xml"
     x.write_text(XML)

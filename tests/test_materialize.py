@@ -25,8 +25,8 @@ TRENDS = {
 
 
 def load_events(spark):
-    """First ~6 hours only: each materialized window is its own Spark job,
-    so the window count (not row count) dominates test wall-clock."""
+    """First ~6 hours only: the window count (not row count) dominates
+    test wall-clock."""
     df = spark.read.parquet(f"{SF}/events.parquet")
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -264,3 +264,144 @@ def test_example_hourly_ladder_labels_period_end(spark, tmp_path):
     assert second[(1, h0 + 3600)] == 1111 - 10 + 50
     assert {k: v for k, v in second.items() if k != (1, h0 + 3600)} == \
         {k: v for k, v in first.items() if k != (1, h0 + 3600)}
+
+
+H0 = 1704067200  # 2024-01-01T00:00Z
+
+
+def _events_at(spark, rows):
+    """raw_events rows from (event_id, user_id, epoch, value)."""
+    return spark.createDataFrame(
+        rows, "event_id long, user_id long, epoch long, value double",
+    ).select("event_id", F.timestamp_seconds("epoch").alias("ts"),
+             "user_id", "value")
+
+
+def _count_writes(monkeypatch):
+    """Names of the parts TrendStorePartStorage.write is called on."""
+    writes = []
+    real = TrendStorePartStorage.write
+
+    def counting(self, *a, **kw):
+        writes.append(self.name)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(TrendStorePartStorage, "write", counting)
+    return writes
+
+
+def test_tick_writes_all_dirty_windows_at_once(spark, stores, monkeypatch):
+    raw, target = stores
+    raw.write(_events_at(spark, [(1, 1, H0 + 60, 1.0), (2, 2, H0 + 3660, 2.0)]))
+    engine = MaterializationEngine(raw.base_dir)
+    spec = make_spec(raw, target, reprocessing_period_s=10**12)
+    writes = _count_writes(monkeypatch)
+    assert engine.tick(spark, spec, now=4e9) == [H0 - 3600, H0, H0 + 3600]
+    assert writes == [target.name]
+
+
+def test_candidates_run_no_spark_job(spark, stores):
+    """The modified log is read on the driver, and the fingerprints are
+    the ones a Spark read of the same log gives."""
+    import hashlib
+    import uuid
+
+    raw, target = stores
+    raw.write(_events_at(spark, [(1, 1, H0 + 60, 1.0), (2, 2, H0 + 3660, 2.0)]))
+    raw.write(_events_at(spark, [(3, 1, H0 + 120, 3.0)]))  # bucket H0 twice
+    engine = MaterializationEngine(raw.base_dir)
+    spec = make_spec(raw, target, reprocessing_period_s=10**12)
+
+    sc = spark.sparkContext
+    group = f"candidates-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        got = engine.candidates(spark, spec, now=4e9)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+    parts: dict[int, list[str]] = {}
+    for r in (raw.modified_log(spark).groupBy("p_bucket")
+              .agg(F.max("modified_at").alias("m"),
+                   F.count(F.lit(1)).alias("n")).collect()):
+        for w in engine._window_of_bucket(spec, r["p_bucket"], raw.partition_size_s):
+            parts.setdefault(w, []).append(
+                f"{raw.name}:{r['p_bucket']}:{r['n']}:{r['m']}")
+    assert got == [(w, hashlib.md5("|".join(sorted(p)).encode()).hexdigest())
+                   for w, p in sorted(parts.items())]
+
+
+def test_backfill_runs_in_passes_and_equals_oneshot(spark, stores, monkeypatch):
+    """29 hours of raw data are 30 dirty hourly windows (each bucket also
+    dirties the window before it): two passes, two target writes, and
+    the target equals the one-shot rollup."""
+    from minerva_etl_46_spark.plans.materialize import PASS_WINDOWS
+
+    raw, target = stores
+    events = _events_at(spark, [
+        (2 * h + u, u, H0 + 3600 * h + 60 * (u + 1), float(h * u))
+        for h in range(29) for u in (1, 2)])
+    raw.write(events)
+    engine = MaterializationEngine(raw.base_dir)
+    spec = make_spec(raw, target, reprocessing_period_s=10**12)
+    writes = _count_writes(monkeypatch)
+    done = engine.tick(spark, spec, now=4e9)
+    assert len(done) == 30 and PASS_WINDOWS < 30 <= 2 * PASS_WINDOWS
+    assert writes == [target.name] * 2
+    assert set(engine.load_state(spec)["window_start"]) == set(done)
+
+    got = target.read(spark).drop("p_bucket").toPandas()
+    src = events.select(
+        "user_id", "ts", F.col("value").alias("n"), F.col("value").alias("sum_value"))
+    want = time_rollup(src, "user_id", "ts", G_1H, TRENDS, bucket_col="bucket").toPandas()
+    key = ["user_id", "bucket"]
+    got = got.sort_values(key).reset_index(drop=True)[want.columns.tolist()]
+    want = want.sort_values(key).reset_index(drop=True)
+    assert got.equals(want), "two-pass backfill != one-shot batch"
+
+
+def test_reprocess_deletes_stale_partition_but_not_a_siblings(spark, tmp_path):
+    """Rows are written at their `label`, which may sit outside their
+    window. A late correction moves window H0's row from partition H0 into
+    partition P, and window H0+1h's row out of P: H0 is stale and goes,
+    P is stale for window H0+1h but was just written for window H0 in
+    the same pass, so it stays."""
+    import os
+
+    raw = TrendStorePartStorage(str(tmp_path), "raw_l", partition_size_s=3600)
+    target = TrendStorePartStorage(str(tmp_path), "labelled", partition_size_s=3600)
+    p = H0 + 7200
+
+    def src_fn(sp, ws, we):
+        return raw.read_window(sp, ws, we).filter(
+            (F.col("ts").cast("long") >= ws) & (F.col("ts").cast("long") < we)
+        ).select("k", F.timestamp_seconds("label").alias("out"))
+
+    def load(rows):
+        raw.write(spark.createDataFrame(rows, "k long, epoch long, label long")
+                  .select("k", F.timestamp_seconds("epoch").alias("ts"), "label"))
+
+    spec = MaterializationSpec(
+        name="labelled", granularity=G_1H, target=target, src_fn=src_fn,
+        sources=[raw], ts_col="out", reprocessing_period_s=10**12)
+    engine = MaterializationEngine(str(tmp_path))
+
+    def dirs():
+        return {int(e.split("=")[1]) for e in os.listdir(target.path)
+                if e.startswith("p_bucket=")}
+
+    load([(1, H0 + 60, H0 + 60), (2, H0 + 3660, p + 120),
+          (3, H0 + 3720, H0 + 3720)])
+    engine.tick(spark, spec, now=4e9)
+    assert dirs() == {H0, H0 + 3600, p}
+
+    load([(1, H0 + 60, p + 60), (2, H0 + 3660, H0 + 3780),
+          (3, H0 + 3720, H0 + 3720)])
+    assert {H0, H0 + 3600} <= set(engine.tick(spark, spec, now=4e9 + 10))
+    assert dirs() == {H0 + 3600, p}
+    got = {(r["k"], r["out"]) for r in target.read(spark).select(
+        "k", F.col("out").cast("long").alias("out")).collect()}
+    assert got == {(1, p + 60), (2, H0 + 3780), (3, H0 + 3720)}
+    assert engine.tick(spark, spec, now=4e9 + 20) == []

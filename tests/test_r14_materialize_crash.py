@@ -25,12 +25,6 @@ import shutil
 import threading
 
 import pytest
-
-# Heavyweight kill/replay gates: real Spark streaming restarts /
-# crash-replay cycles. Opt-in (RUN_SLOW_GATES=1) so the default
-# `pytest tests/` completes inside the driver's budget
-# (VERDICT r14 item 6).
-pytestmark = pytest.mark.slow_gate
 from pyspark.sql import functions as F
 
 from minerva_etl_46_spark.catalog import Trend
