@@ -264,17 +264,15 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str, k: int = 32,
     handled by cluster-level sampling than pairwise verification — the
     cap makes that policy explicit instead of letting one bucket own the
     job. None disables the cap (fixture-scale default)."""
-    # r15: the self-join below used to keep the full minhash pipeline
-    # from evaluating twice via localCheckpoint(eager=False). That pins
-    # the signature frame deserialized in executor storage (never
-    # unpersisted — the r14 lesson at 32-way concurrency) and is not
-    # fault-tolerant. Instead, repartition the band rows on the JOIN KEY
-    # once: both self-join sides then hang off byte-identical Exchange
-    # subtrees, ReuseExchange computes the minhash+banding map side ONCE,
-    # and the join needs no further shuffle (guide §2.4 "two operations
-    # keyed the same way can share one exchange"). Same plan-count
-    # effect as the lineage cut, zero storage footprint, recomputable
-    # on executor loss.
+    # The self-join below must not evaluate the minhash pipeline twice.
+    # A localCheckpoint(eager=False) lineage cut would pin the signature
+    # frame deserialized in executor storage (never unpersisted) and is
+    # not fault-tolerant. Instead, repartition the band rows on the JOIN
+    # KEY once: both self-join sides then hang off byte-identical
+    # Exchange subtrees, ReuseExchange computes the minhash+banding map
+    # side ONCE, and the join needs no further shuffle (guide §2.4 "two
+    # operations keyed the same way can share one exchange"). Zero
+    # storage footprint, recomputable on executor loss.
     long_ = _banded_long(sig, id_col, k, bands, hash_family) \
         .repartition("band_id", "bh")
     if max_bucket_size is not None:
