@@ -38,7 +38,7 @@ def hourly_traffic(base_dir: str) -> MaterializationSpec:
 
     return MaterializationSpec(
         name="traffic_1h", granularity=G_1H, target=target, src_fn=src_fn,
-        sources=[raw], ts_col="bucket",
+        sources=[raw], ts_col="bucket", closed="end",
         processing_delay_s=0, stability_delay_s=0,
     )
 
@@ -65,4 +65,5 @@ def daily_traffic(base_dir: str) -> MaterializationSpec:
     return MaterializationSpec(
         name="traffic_1d", granularity=G_1D, target=target, src_fn=src_fn,
         sources=[hourly], ts_col="bucket", tz="Europe/Amsterdam",
+        closed="end",
     )

@@ -15,7 +15,7 @@ md5 (not xxhash64) wherever the value must match the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -149,6 +149,18 @@ def _banded_long(sig: DataFrame, id_col: str, k: int, bands: int,
     ).select(id_col, "e.band_id", "e.bh")
 
 
+def _cap_buckets(band_rows: DataFrame, max_bucket_size: int) -> DataFrame:
+    """Drop the band rows of (band_id, bh) buckets holding more than
+    ``max_bucket_size`` rows. The size is a count window over the bucket
+    key, not a join against a grouped copy: the rows are banded once,
+    and a frame already partitioned on the key is not shuffled again."""
+    return (band_rows
+            .withColumn("__n", F.count(F.lit(1)).over(
+                Window.partitionBy("band_id", "bh")))
+            .filter(F.col("__n") <= max_bucket_size)
+            .drop("__n"))
+
+
 def lsh_candidates_against(query_sig: DataFrame, index_sig: DataFrame,
                            id_col: str, k: int = 32, bands: int = 8,
                            hash_family: str = "xx",
@@ -165,25 +177,19 @@ def lsh_candidates_against(query_sig: DataFrame, index_sig: DataFrame,
     day's arrivals. Returns (q_id, i_id) distinct candidate pairs.
 
     ``max_bucket_size`` is the same hot-bucket guard as the symmetric
-    lsh_candidate_pairs (ADVICE r4): one template/boilerplate band bucket
+    lsh_candidate_pairs: one template/boilerplate band bucket
     in the STORED corpus would otherwise fan every matching new doc out
     against the whole bucket on every batch, unbounded in corpus size —
     exactly the degenerate case the cap exists for. Oversized index-side
     buckets are dropped before the probe join (recall on boilerplate
     buckets is the documented trade, as in the symmetric path)."""
-    # r15: the two signature localCheckpoints here were single-consumer
-    # (each side feeds exactly one banding) — pure storage pinning with
-    # no recompute saved. Removed (guide §5: cache only reused frames).
+    # no localCheckpoint on either signature: each side feeds exactly
+    # one banding, so a cut would only pin storage, saving no recompute
     qb = _banded_long(query_sig, id_col, k, bands, hash_family)
     ib = _banded_long(index_sig, id_col, k, bands, hash_family)
     ibl = ib.select(F.col(id_col).alias("i_id"), "band_id", "bh")
     if max_bucket_size is not None:
-        sizes = ibl.groupBy("band_id", "bh").agg(
-            F.count(F.lit(1)).alias("__n")
-        )
-        ibl = ibl.join(
-            sizes.filter(F.col("__n") <= max_bucket_size), ["band_id", "bh"]
-        ).drop("__n")
+        ibl = _cap_buckets(ibl, max_bucket_size)
     return (
         qb.select(F.col(id_col).alias("q_id"), "band_id", "bh")
         .join(ibl, ["band_id", "bh"])
@@ -276,15 +282,7 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str, k: int = 32,
     long_ = _banded_long(sig, id_col, k, bands, hash_family) \
         .repartition("band_id", "bh")
     if max_bucket_size is not None:
-        # the size agg groups on the partitioning key, so it also rides
-        # the shared exchange (no extra shuffle)
-        sizes = long_.groupBy("band_id", "bh").agg(
-            F.count(F.lit(1)).alias("__n"))
-        long_ = (
-            long_.join(sizes.filter(F.col("__n") <= max_bucket_size),
-                       ["band_id", "bh"])
-            .drop("__n")
-        )
+        long_ = _cap_buckets(long_, max_bucket_size)
     a = long_.select(F.col(id_col).alias("a_id"), "band_id", "bh")
     b = long_.select(F.col(id_col).alias("b_id"), "band_id", "bh")
     return (
@@ -301,19 +299,15 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, id_col: str, text_col: str,
     shingle sets, count intersections via an equi-join on the shingle, and
     |A∪B| = |A|+|B|−|A∩B|. All integer arithmetic until the final
     deterministic division."""
-    from pyspark.sql import Window
-
     df = spread(df)
     sh = df.select(
         F.col(id_col).alias("jid"),
         F.explode(F.array_distinct(shingles(text_col, shingle_n))).alias("sh"),
     )
-    # r15: the separate sizes branch (and the localCheckpoint that kept
-    # the 3-consumer explode from tripling) is gone — the per-doc set
-    # size rides each shingle row via ONE count window over jid, so the
-    # two size joins disappear and the explode is planned once per join
-    # side with no storage pinning. n_sh is exact and constant within a
-    # doc, so min() below recovers it losslessly per pair.
+    # the per-doc set size rides each shingle row via ONE count window
+    # over jid: no size join and no second explode branch, and no
+    # storage pinning. n_sh is exact and constant within a doc, so
+    # min() below recovers it losslessly per pair.
     sh = sh.withColumn(
         "n_sh", F.count(F.lit(1)).over(Window.partitionBy("jid")))
     a_sh = sh.select(F.col("jid").alias("a_id"), "sh",
@@ -393,31 +387,30 @@ def connected_components(edges: DataFrame, a_col: str = "a_id",
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
+        # the round's label changes are counted by the checkpoint's own
+        # job (observe), so a round is one action
+        moved = Observation()
+        labels = (
             labels.join(neighbor_min, "node", "left")
             .select(
                 "node",
                 F.least(F.col("label"), F.coalesce("nbr_label", F.col("label")))
-                .alias("label"),
+                .alias("new_label"),
+                F.col("label").alias("old_label"),
             )
+            .observe(moved, F.count(F.when(
+                F.col("new_label") != F.col("old_label"), 1)).alias("n"))
+            .select("node", F.col("new_label").alias("label"))
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if moved.get["n"] == 0:
             break
     else:
         # exhausting max_iter with labels still moving means some
         # component's diameter exceeds the budget — returning the
         # half-propagated labels would SILENTLY split that component
         # into several "canonical" docs (dedup under-removal with no
-        # signal, r10 review). Converge-or-raise: near-dup components
+        # signal). Converge-or-raise: near-dup components
         # are chains of mutated copies, so a diameter past the budget
         # is itself a data smell worth surfacing.
         raise RuntimeError(

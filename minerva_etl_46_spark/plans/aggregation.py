@@ -45,8 +45,8 @@ def generate_time_rollup(
     tz = spec_kw.get("tz", "UTC")
     if g_to.is_calendar:
         # calendar granularities have no fixed second count (seconds is
-        # None — passing it through previously broke every generated
-        # 1d/1w/1month ladder step, r10 review): pick the largest grid
+        # None, and passing it through breaks every generated
+        # 1d/1w/1month ladder step): pick the largest grid
         # that tiles every LOCAL period boundary — the UTC day grid when
         # aligning in UTC, the hour grid for whole-hour-offset zones
         # (run_window's tiling check rejects anything off-grid loudly)
@@ -72,15 +72,17 @@ def generate_time_rollup(
         # tz flows BOTH to the engine's window alignment (via spec_kw)
         # and to the rollup's bucket labels — split alignment would
         # label local-window rows onto the neighbor window's partition
-        # grid, which its dynamic overwrite then clobbers (r10 review)
+        # grid, which its dynamic overwrite then clobbers
         return time_rollup(rows, entity_col, ts_col, g_to, trends,
                            bucket_col="bucket", exact=exact, label="end",
                            tz=tz)
 
+    # src_fn reads (start, end]: declare it, so a written span dirties
+    # only the windows that read it
     return MaterializationSpec(
         name=f"{part_name}_{store.granularity}_to_{target_granularity}",
         granularity=g_to, target=target, src_fn=src_fn, sources=[raw],
-        ts_col="bucket", **spec_kw,
+        ts_col="bucket", **{"closed": "end", **spec_kw},
     )
 
 
@@ -130,7 +132,7 @@ def generate_entity_rollup(
     return MaterializationSpec(
         name=f"{part_name}_{store.granularity}_{target_suffix}",
         granularity=g, target=target, src_fn=src_fn, sources=[raw],
-        ts_col="bucket", **spec_kw,
+        ts_col="bucket", **{"closed": "end", **spec_kw},
     )
 
 

@@ -14,20 +14,34 @@ Re-implements the reference's materialization daemon semantics
     reprocess    = late data changes the fingerprint → window re-runs, but
                    only within `reprocessing_period` of the window end
 
+Candidates: every write logs, per partition bucket it touched, the span
+(min, max) of the timestamps it changed there. A span dirties only the
+windows that hold one of its timestamps, under the end of the window the
+spec declares closed (``MaterializationSpec.closed``: "end" for Minerva's
+period-END convention, where a sample on the hour belongs to the hour it
+closes). A spec that declares nothing dirties every window whose closed
+interval [start, end] meets the span, so a boundary row reaches both
+windows it could belong to. A log entry without a span (a stale-partition
+delete, or an entry logged before spans were) dirties every window its
+whole bucket can reach. A window's fingerprint digests only the entries
+that reach it.
+
 Spark mapping: a tick runs its dirty windows as passes of at most
 ``PASS_WINDOWS``. A pass unions every window's pipeline output, tagged with
-its window start, checkpoints it once, collects the distinct (window,
-partition) pairs once, and overwrites exactly the target partitions those
-windows reach in ONE dynamic-partition write; ``run_window`` is the pass of
-one window. State and modified-log are tiny bookkeeping Parquet datasets
-read and written on the driver (pandas / pyarrow — scheduling metadata,
-never fact data; at 1000-executor scale this remains kilobytes per part),
-so finding the candidates runs no Spark job.
+its window start, checkpoints it once, collects each (window, partition)
+pair with its timestamp span once, and overwrites exactly the target
+partitions those windows reach in ONE dynamic-partition write, which logs
+those spans for the materializations chained off the target;
+``run_window`` is the pass of one window. State and modified-log are tiny
+bookkeeping Parquet datasets read and written on the driver (pandas /
+pyarrow — scheduling metadata, never fact data; at 1000-executor scale
+this remains kilobytes per part), so finding the candidates runs no Spark
+job.
 
 The same loop runs under Structured Streaming `availableNow` by pointing
 `foreachBatch` at `run_window` — the builders are identical (SURVEY §2.9).
 
-Crash/concurrency contract (r14, pinned by tests/test_r14_materialize_crash.py):
+Crash/concurrency contract (pinned by tests/test_r14_materialize_crash.py):
 
 - **Crash-converge.** A pass saves its fingerprints AFTER the target write
   (staged rename), so a kill anywhere inside a pass leaves the OLD
@@ -74,7 +88,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minerva_etl_46_spark.functions.timestamps import Granularity
-from minerva_etl_46_spark.sources.trendstore import TrendStorePartStorage, bucket_of
+from minerva_etl_46_spark.sources.trendstore import (
+    Span,
+    TrendStorePartStorage,
+    bucket_of,
+    span_union,
+    ts_span,
+)
 
 STATE_DIR = "_materialization_state"
 #: windows per materialization pass: bounds the union's plan depth and
@@ -82,6 +102,7 @@ STATE_DIR = "_materialization_state"
 PASS_WINDOWS = 24
 #: the window-start tag a pass adds to each window's rows
 _WINDOW_COL = "__window_start"
+_US = 1_000_000
 
 
 def _cal_floor(epoch: int, unit: str, tz: str) -> int:
@@ -149,6 +170,16 @@ class MaterializationSpec:
     ts_col: str = "ts"
     #: local timezone for calendar (day/week/month) window alignment
     tz: str = "UTC"
+    #: "end" when ``src_fn`` reads (start, end], Minerva's period-END
+    #: convention. Left None, a written timestamp dirties every window
+    #: whose closed interval [start, end] holds it, so a boundary row
+    #: reaches both windows it may belong to.
+    closed: str | None = None
+
+    def __post_init__(self):
+        if self.closed not in (None, "end"):
+            raise ValueError(f"materialization {self.name}: closed must be "
+                             f"'end' or None, not {self.closed!r}")
 
 
 class MaterializationEngine:
@@ -205,41 +236,47 @@ class MaterializationEngine:
 
     # ---- candidate discovery ----
 
+    def _window_floor(self, spec: MaterializationSpec, epoch: int) -> int:
+        """Start of the granularity window [start, end) holding ``epoch``."""
+        if spec.granularity.is_calendar:
+            return _cal_floor(epoch, spec.granularity.unit, spec.tz)
+        g = spec.granularity.seconds
+        return (epoch // g) * g
+
+    def _windows_of_span(self, spec: MaterializationSpec, lo_us: int,
+                         hi_us: int, closed: str | None) -> list[int]:
+        """The windows holding a timestamp of the span [lo, hi] (epoch
+        microseconds): windows (start, end] for ``closed="end"``,
+        [start, end] for None.
+
+        The scan starts one window before the one ``lo`` starts: a
+        timestamp on a boundary is the closed END of that window.
+        Calendar granularities (day/week/month) step through local-tz
+        boundaries instead of fixed seconds; windows are variable length
+        (23h/25h DST days, 28–31-day months)."""
+        w = self._window_floor(spec, self._window_floor(spec, lo_us // _US) - 1)
+        out = []
+        while w * _US <= hi_us:
+            w_end = self._window_end(spec, w)
+            if lo_us <= w_end * _US and (
+                    hi_us > w * _US if closed == "end" else hi_us >= w * _US):
+                out.append(w)
+            w = w_end
+        return out
+
     def _window_of_bucket(self, spec: MaterializationSpec, bucket: int,
                           partition_size_s: int) -> list[int]:
-        """All granularity windows whose data can live in one storage
-        partition [bucket, bucket+partition_size).
+        """All granularity windows whose closed interval [start, end]
+        meets one storage partition [bucket, bucket+partition_size): the
+        mapping for a log entry that records no span (a stale-partition
+        delete, or an entry written before spans were logged).
 
-        Extends ONE granularity backwards: under Minerva's period-END
-        convention a row with ts == bucket (exactly on the partition
-        boundary) belongs to the window (bucket-g, bucket], whose start is
-        bucket-g — without the extension that window is never a candidate
-        and boundary rows silently never materialize (bug found by the
-        aggregation-generator tests when partition_size == granularity).
-        The extra window costs one fingerprint check, usually a no-op.
-
-        Calendar granularities (day/week/month) iterate local-tz-aligned
-        boundaries instead of fixed-second steps; windows are variable
-        length (23h/25h DST days, 28–31-day months)."""
-        if spec.granularity.is_calendar:
-            unit, tz = spec.granularity.unit, spec.tz
-            w = _cal_floor(_cal_floor(bucket, unit, tz) - 1, unit, tz)
-            out = []
-            while w < bucket + partition_size_s:
-                w_end = _cal_next(w, unit, tz)
-                if w_end >= bucket:
-                    out.append(w)
-                w = w_end
-            return out
-        g = spec.granularity.seconds
-        start = (bucket // g) * g - g
-        out = []
-        w = start
-        while w < bucket + partition_size_s:
-            if w + g >= bucket:
-                out.append(w)
-            w += g
-        return out
+        It reaches ONE window back: a row with ts == bucket belongs, under
+        Minerva's period-END convention, to the window (bucket-g, bucket].
+        With no span to show that no such row was written, that window
+        re-runs each time the bucket is logged."""
+        return self._windows_of_span(spec, bucket * _US,
+                                     (bucket + partition_size_s) * _US - 1, None)
 
     def _window_end(self, spec: MaterializationSpec, window_start: int) -> int:
         if spec.granularity.is_calendar:
@@ -249,16 +286,29 @@ class MaterializationEngine:
     def candidates(self, spark: SparkSession, spec: MaterializationSpec,
                    now: float | None = None) -> list[tuple[int, str]]:
         """(window_start, fingerprint) pairs that need (re)processing.
-        Reads the sources' modified logs on the driver: no Spark job."""
+        Reads the sources' modified logs on the driver: no Spark job.
+
+        Each log entry dirties the windows its span reaches under the
+        spec's closed end (a whole-bucket entry: ``_window_of_bucket``).
+        A window's fingerprint digests, per source bucket, the count and
+        latest time of the entries that reach it, so a write elsewhere
+        in a shared bucket leaves it unchanged."""
         now = time.time() if now is None else now
-        # gather modified windows + per-window source digests
         win_info: dict[int, list[str]] = {}
         win_last_mod: dict[int, float] = {}
         for src in spec.sources:
-            for b, n, m in src.modified_buckets():
-                for w in self._window_of_bucket(spec, b, src.partition_size_s):
-                    win_info.setdefault(w, []).append(f"{src.name}:{b}:{n}:{m}")
-                    win_last_mod[w] = max(win_last_mod.get(w, 0.0), m)
+            reach: dict[tuple[int, int], list] = {}  # (window, bucket) → [n, m]
+            for b, lo, hi, n, m in src.modified_spans():
+                ws = (self._window_of_bucket(spec, b, src.partition_size_s)
+                      if lo is None else
+                      self._windows_of_span(spec, lo, hi, spec.closed))
+                for w in ws:
+                    acc = reach.setdefault((w, b), [0, m])
+                    acc[0] += n
+                    acc[1] = max(acc[1], m)
+            for (w, b), (n, m) in reach.items():
+                win_info.setdefault(w, []).append(f"{src.name}:{b}:{n}:{m}")
+                win_last_mod[w] = max(win_last_mod.get(w, 0.0), m)
         state = self.load_state(spec).set_index("window_start")
         out: list[tuple[int, str]] = []
         for w, parts in sorted(win_info.items()):
@@ -323,14 +373,18 @@ class MaterializationEngine:
         # any nondeterministic source
         df = reduce(DataFrame.unionByName, frames).localCheckpoint(eager=True)
         by_window: dict[int, set[int]] = {w: set() for w in ends}
+        spans: dict[int | None, Span | None] = {}
         # bounded-by: the pass's windows × the partitions each one reaches
-        for w, b in df.select(_WINDOW_COL, bucket_of(
-                spec.ts_col, spec.target.partition_size_s)).distinct().collect():
+        for w, b, lo, hi in df.groupBy(_WINDOW_COL, bucket_of(
+                spec.ts_col, spec.target.partition_size_s)).agg(
+                    *ts_span(spec.ts_col)).collect():
             by_window[w].add(b)
-        written = set().union(*by_window.values())
+            span = None if lo is None else (lo, hi)
+            spans[b] = span_union(spans[b], span) if b in spans else span
+        written = set(spans)
         # a None bucket (NULL timestamp) makes write refuse before any data lands
         spec.target.write(df.drop(_WINDOW_COL), ts_col=spec.ts_col,
-                          touched=list(written))
+                          touched=spans)
         # Dynamic partition overwrite cannot DELETE: a reprocess whose new
         # output no longer reaches some partition it previously wrote
         # (late corrections moved/removed all its rows — or the whole
@@ -356,8 +410,9 @@ class MaterializationEngine:
             # mid-delete can lose the rmtree (the replay finishes it:
             # fingerprints unsaved ⇒ the windows re-run) but never the
             # dirty mark. A crash between log and rmtree just re-logs on
-            # replay — at-least-once, idempotent downstream.
-            spec.target._log_modified(spark, to_remove, job_id=None)
+            # replay — at-least-once, idempotent downstream. A delete
+            # logs no span: downstream re-runs the whole bucket.
+            spec.target._log_modified(dict.fromkeys(to_remove), job_id=None)
         for b in to_remove:
             shutil.rmtree(os.path.join(spec.target.path, f"p_bucket={b}"))
         processed_at = time.time() if now is None else now

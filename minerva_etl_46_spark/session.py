@@ -71,7 +71,8 @@ def tune(spark: SparkSession) -> SparkSession:
     for k in _CORRECTNESS_CONFS:
         try:
             got = spark.conf.get(k)
-        except Exception:
+        except Exception as exc:  # unreadable: cannot show it took
+            drifted.append(f"{k} unreadable ({type(exc).__name__}: {exc})")
             continue
         if str(got).lower() != RUNTIME_CONFS[k].lower():
             drifted.append(f"{k}={got!r} (want {RUNTIME_CONFS[k]!r})")

@@ -81,6 +81,18 @@ def _union_schema(part: str, recorded: StructType,
     return StructType(fields)
 
 
+#: (min, max) of a set of timestamps, in epoch microseconds
+Span = tuple[int, int]
+
+
+def ts_span(ts_col: str) -> list[Column]:
+    """The aggregates giving a group's ``Span`` of ``ts_col``: its min and
+    max in epoch microseconds, through TIMESTAMP as ``bucket_of`` reads
+    it (a long column counts seconds)."""
+    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    return [F.min(us), F.max(us)]
+
+
 def bucket_of(ts_col: str, partition_size_s: int):
     # route through TIMESTAMP first: NTZ-typed in-process frames can't cast
     # straight to long in Spark 4 (see functions/timestamps.ensure_timestamp)
@@ -163,26 +175,53 @@ class TrendStorePartStorage:
         os.replace(tmp, self.meta_path)
 
     def write(self, df: DataFrame, ts_col: str = "ts", job_id: int | None = None,
-              touched: list[int | None] | None = None) -> list[int]:
+              touched: dict[int | None, Span | None] | None = None) -> list[int]:
         """Dynamic-partition-overwrite write; returns touched p_buckets and
         appends them to the modified log.
 
-        ``touched``: the distinct p_buckets of ``df``'s rows
-        (``bucket_of(ts_col)``, None for a NULL timestamp) from a caller
-        that has already collected them. It must cover every bucket
-        ``df`` reaches; a listed bucket without rows is logged, not
-        rewritten. Left out, one column-pruned job collects them here."""
+        An overwrite replaces whatever its buckets held, so each bucket is
+        logged with the span of ``df``'s rows there widened by the spans
+        the bucket's earlier log entries record: together they cover every
+        row the write can have added or removed.
+
+        ``touched``: {p_bucket: ``ts_span`` of ``df``'s rows there} (the
+        key None for a NULL timestamp) from a caller that has already
+        collected it. It must cover every bucket ``df`` reaches; a listed
+        bucket without rows is logged, not rewritten. Left out, it is
+        collected here (``_spans_of``)."""
+        if touched is None:
+            touched = self._spans_of(df, ts_col)
+        return self._overwrite(df, ts_col, job_id, self._with_replaced(touched))
+
+    def _spans_of(self, df: DataFrame, ts_col: str) -> dict[int | None, Span]:
+        """{p_bucket: span of ``df``'s timestamps there}: one column-pruned
+        job. A NULL timestamp gives the key None."""
+        # bounded-by: distinct partition buckets of ONE batch (≤ batch span / partition_size)
+        return {b: (lo, hi) for b, lo, hi in df.groupBy(
+            bucket_of(ts_col, self.partition_size_s)).agg(*ts_span(ts_col)).collect()}
+
+    def _with_replaced(self, spans: dict[int | None, Span | None]
+                       ) -> dict[int | None, Span | None]:
+        """``spans`` widened by the spans already logged for each bucket;
+        a bucket with an entry that records none stays whole."""
+        out = dict(spans)
+        for b, lo, hi, _, _ in self.modified_spans():
+            if b in out:
+                out[b] = span_union(out[b], None if lo is None else (lo, hi))
+        return out
+
+    def _overwrite(self, df: DataFrame, ts_col: str, job_id: int | None,
+                   spans: dict[int | None, Span | None]) -> list[int]:
+        """Overwrite the buckets ``spans`` lists with ``df``'s rows, then
+        log each with its span (None: the whole bucket)."""
         spark = df.sparkSession
         out = df.withColumn("p_bucket", bucket_of(ts_col, self.partition_size_s))
-        if touched is None:
-            # bounded-by: distinct partition buckets of ONE batch (≤ batch span / partition_size)
-            touched = [r[0] for r in out.select("p_bucket").distinct().collect()]
-        if any(b is None for b in touched):
+        if None in spans:
             # a NULL timestamp has no partition: letting it through writes
             # a __HIVE_DEFAULT_PARTITION__ directory the time-grid
             # bookkeeping (modified log, retention, compaction) cannot
             # attribute, and _log_modified would crash AFTER the data
-            # landed. Reject BEFORE anything is written (r10 review).
+            # landed. Reject BEFORE anything is written.
             raise ValueError(
                 f"part {self.name!r}: {ts_col} contains NULLs — rows "
                 "without a timestamp have no partition; filter or repair "
@@ -193,10 +232,10 @@ class TrendStorePartStorage:
         # tasks × B buckets small files, and a single-file source writes
         # ALL buckets serially in one task. With it, bucket count (times
         # the salt fan-out) is the write parallelism AND the file count.
-        # explicit numPartitions (known driver-side from `touched`): an
+        # explicit numPartitions (known driver-side from `spans`): an
         # unnumbered repartition lets AQE coalesce the tiny-batch case
         # back to 1-2 tasks, serializing one directory write per bucket
-        n_parts = max(1, len(touched)) * self.files_per_partition
+        n_parts = max(1, len(spans)) * self.files_per_partition
         if self.files_per_partition > 1:
             salted = out.withColumn(
                 "_w_salt",
@@ -211,44 +250,56 @@ class TrendStorePartStorage:
         (out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("p_bucket").parquet(self.path))
-        self._log_modified(spark, touched, job_id)
-        return sorted(touched)
+        self._log_modified(spans, job_id)
+        return sorted(spans)
 
-    def _log_modified(self, spark: SparkSession, buckets: list[int], job_id: int | None) -> None:
-        # Driver-side bookkeeping append (bounded by touched buckets —
-        # already a driver-side list); see sources/paio.py for why this
-        # bypasses spark.createDataFrame.
+    def _log_modified(self, spans: dict[int, Span | None],
+                      job_id: int | None) -> None:
+        """Append one log entry per bucket, with the span of timestamps
+        the write changed there (None: the whole bucket). Driver-side
+        bookkeeping bounded by the touched buckets; see sources/paio.py
+        for why this bypasses spark.createDataFrame."""
         import pyarrow as pa
 
         from minerva_etl_46_spark.sources.paio import append_table
 
         now = time.time()
+        buckets = list(spans)
         append_table(self.modified_log_path, pa.Table.from_pydict({
             "part": [self.name] * len(buckets),
             "p_bucket": [int(b) for b in buckets],
             "modified_at": [now] * len(buckets),
             "job_id": [job_id] * len(buckets),
+            "ts_min_us": [None if spans[b] is None else spans[b][0] for b in buckets],
+            "ts_max_us": [None if spans[b] is None else spans[b][1] for b in buckets],
         }, schema=_log_schema()))
 
-    def modified_buckets(self) -> list[tuple[int, int, float]]:
-        """(p_bucket, log entries, latest modified_at) per bucket in the
-        modified log, read on the driver: the log is bookkeeping bounded
-        by the buckets written within retention, so the materialization
-        engine's candidate scan runs no Spark job. Same rows as a
-        ``groupBy("p_bucket")`` over ``modified_log(spark)``."""
+    def modified_spans(self) -> list[tuple[int, int | None, int | None, int, float]]:
+        """(p_bucket, ts_min_us, ts_max_us, log entries, latest
+        modified_at) per distinct bucket and span in the modified log,
+        read on the driver: the log is bookkeeping bounded by the buckets
+        written within retention, so the materialization engine's
+        candidate scan runs no Spark job. The span is None for a whole-
+        bucket entry (a stale-partition delete, or an entry written
+        before spans were logged). Same rows as a ``groupBy("p_bucket",
+        "ts_min_us", "ts_max_us")`` over ``modified_log(spark)``."""
         if not os.path.isdir(self.modified_log_path):
             return []
         import pyarrow.dataset as ds
 
-        # the fixed schema: no inference, and a log directory holding no
-        # file yet reads as empty; dot- and underscore-prefixed entries
+        # the fixed schema: no inference, an entry written before the span
+        # columns existed reads them as NULL, and a log directory holding
+        # no file yet reads as empty; dot- and underscore-prefixed entries
         # (paio's staged .tmp files) are skipped, as Spark skips them
         log = ds.dataset(self.modified_log_path, schema=_log_schema(),
                          format="parquet").to_table(
-                             columns=["p_bucket", "modified_at"])
-        grouped = log.group_by("p_bucket").aggregate(
+                             columns=["p_bucket", "ts_min_us", "ts_max_us",
+                                      "modified_at"])
+        grouped = log.group_by(["p_bucket", "ts_min_us", "ts_max_us"]).aggregate(
             [("modified_at", "max"), ([], "count_all")])
         return list(zip(grouped["p_bucket"].to_pylist(),
+                        grouped["ts_min_us"].to_pylist(),
+                        grouped["ts_max_us"].to_pylist(),
                         grouped["count_all"].to_pylist(),
                         grouped["modified_at_max"].to_pylist()))
 
@@ -265,23 +316,25 @@ class TrendStorePartStorage:
         from minerva_etl_46_spark.operators.upsert import upsert_latest
 
         spark = staged.sparkSession
-        touched = [
-            r[0] for r in staged.select(
-                bucket_of(ts_col, self.partition_size_s).alias("b")
-            ).distinct().collect()  # bounded-by: staged batch's touched buckets
-        ]
+        touched = self._spans_of(staged, ts_col)
         existing = None
         if os.path.isdir(self.path) and any(
             e.startswith("p_bucket=") for e in os.listdir(self.path)
         ):
             existing = self._read_partitions(
-                spark, set(touched).__contains__,
-                F.col("p_bucket").isin(touched)).drop("p_bucket")
+                spark, touched.__contains__,
+                F.col("p_bucket").isin(list(touched))).drop("p_bucket")
         merged = upsert_latest(existing, staged, keys=keys, version_cols=version_cols)
         merged = merged.localCheckpoint(eager=True)
         # keep-latest leaves rows only in staged's buckets (existing rows
-        # are read from those alone), so staged's buckets cover merged's
-        return self.write(merged, ts_col=ts_col, job_id=job_id, touched=touched)
+        # are read from those alone), so staged's buckets cover merged's.
+        # With the timestamp among the keys a staged row replaces only
+        # the row at its own timestamp and every other row is rewritten
+        # unchanged, so staged's spans cover the change; without it a
+        # staged row may replace one anywhere in its bucket.
+        if ts_col not in keys:
+            touched = dict.fromkeys(touched)
+        return self._overwrite(merged, ts_col, job_id, touched)
 
     def _reader(self, spark: SparkSession):
         """A parquet reader carrying the recorded data schema; a part
@@ -343,11 +396,21 @@ class TrendStorePartStorage:
 
 def _log_schema():
     """The modified log's columns: ``_log_modified`` writes them,
-    ``modified_buckets`` reads them without inference."""
+    ``modified_spans`` reads them without inference. ``ts_min_us`` and
+    ``ts_max_us`` bound the timestamps (epoch microseconds) the logged
+    write changed in the bucket; NULL means the whole bucket."""
     import pyarrow as pa
 
     return pa.schema([("part", pa.string()), ("p_bucket", pa.int64()),
-                      ("modified_at", pa.float64()), ("job_id", pa.int64())])
+                      ("modified_at", pa.float64()), ("job_id", pa.int64()),
+                      ("ts_min_us", pa.int64()), ("ts_max_us", pa.int64())])
+
+
+def span_union(a: Span | None, b: Span | None) -> Span | None:
+    """The smallest span covering both; None (the whole bucket) absorbs."""
+    if a is None or b is None:
+        return None
+    return min(a[0], b[0]), max(a[1], b[1])
 
 
 def _int_bucket_dirs(path: str):

@@ -248,7 +248,8 @@ def test_example_hourly_ladder_labels_period_end(spark, tmp_path):
     load([(e, h0 + 3600 * k + 900 * (q + 1), (k + 1) * 10 ** q, 0, 1)
           for e in (1, 2) for k in (0, 1) for q in range(4)])
     now = 4e9
-    engine.tick(spark, spec, now=now)
+    # closed="end": each hour's span reaches its own window only
+    assert engine.tick(spark, spec, now=now) == [h0, h0 + 3600]
 
     def hourly():
         return {(r["entity_id"], r["bucket"]): r["calls"]
@@ -259,7 +260,7 @@ def test_example_hourly_ladder_labels_period_end(spark, tmp_path):
                      for e in (1, 2) for k in (0, 1)}
 
     load([(1, h0 + 1800, 50, 0, 2)])  # late correction inside hour 0
-    assert h0 in engine.tick(spark, spec, now=now)
+    assert engine.tick(spark, spec, now=now) == [h0]
     second = hourly()
     assert second[(1, h0 + 3600)] == 1111 - 10 + 50
     assert {k: v for k, v in second.items() if k != (1, h0 + 3600)} == \
@@ -296,7 +297,7 @@ def test_tick_writes_all_dirty_windows_at_once(spark, stores, monkeypatch):
     engine = MaterializationEngine(raw.base_dir)
     spec = make_spec(raw, target, reprocessing_period_s=10**12)
     writes = _count_writes(monkeypatch)
-    assert engine.tick(spark, spec, now=4e9) == [H0 - 3600, H0, H0 + 3600]
+    assert engine.tick(spark, spec, now=4e9) == [H0, H0 + 3600]
     assert writes == [target.name]
 
 
@@ -322,21 +323,24 @@ def test_candidates_run_no_spark_job(spark, stores):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
 
+    reach: dict[tuple[int, int], list] = {}
+    for r in raw.modified_log(spark).collect():
+        for w in engine._windows_of_span(spec, r["ts_min_us"], r["ts_max_us"],
+                                         spec.closed):
+            acc = reach.setdefault((w, r["p_bucket"]), [0, r["modified_at"]])
+            acc[0] += 1
+            acc[1] = max(acc[1], r["modified_at"])
     parts: dict[int, list[str]] = {}
-    for r in (raw.modified_log(spark).groupBy("p_bucket")
-              .agg(F.max("modified_at").alias("m"),
-                   F.count(F.lit(1)).alias("n")).collect()):
-        for w in engine._window_of_bucket(spec, r["p_bucket"], raw.partition_size_s):
-            parts.setdefault(w, []).append(
-                f"{raw.name}:{r['p_bucket']}:{r['n']}:{r['m']}")
+    for (w, b), (n, m) in reach.items():
+        parts.setdefault(w, []).append(f"{raw.name}:{b}:{n}:{m}")
     assert got == [(w, hashlib.md5("|".join(sorted(p)).encode()).hexdigest())
                    for w, p in sorted(parts.items())]
 
 
 def test_backfill_runs_in_passes_and_equals_oneshot(spark, stores, monkeypatch):
-    """29 hours of raw data are 30 dirty hourly windows (each bucket also
-    dirties the window before it): two passes, two target writes, and
-    the target equals the one-shot rollup."""
+    """29 hours of raw data, none on an hour boundary, are 29 dirty
+    hourly windows: two passes, two target writes, and the target equals
+    the one-shot rollup."""
     from minerva_etl_46_spark.plans.materialize import PASS_WINDOWS
 
     raw, target = stores
@@ -348,7 +352,7 @@ def test_backfill_runs_in_passes_and_equals_oneshot(spark, stores, monkeypatch):
     spec = make_spec(raw, target, reprocessing_period_s=10**12)
     writes = _count_writes(monkeypatch)
     done = engine.tick(spark, spec, now=4e9)
-    assert len(done) == 30 and PASS_WINDOWS < 30 <= 2 * PASS_WINDOWS
+    assert len(done) == 29 and PASS_WINDOWS < 29 <= 2 * PASS_WINDOWS
     assert writes == [target.name] * 2
     assert set(engine.load_state(spec)["window_start"]) == set(done)
 
@@ -405,3 +409,105 @@ def test_reprocess_deletes_stale_partition_but_not_a_siblings(spark, tmp_path):
         "k", F.col("out").cast("long").alias("out")).collect()}
     assert got == {(1, p + 60), (2, H0 + 3780), (3, H0 + 3720)}
     assert engine.tick(spark, spec, now=4e9 + 20) == []
+
+
+# ---------------------------------------------------------------------------
+# timestamp spans in the modified log
+# ---------------------------------------------------------------------------
+
+SPRING, SPRING_END = 1711839600, 1711922400  # 2024-03-31, Amsterdam: 23 h
+FALL, FALL_END = 1729980000, 1730070000      # 2024-10-27, Amsterdam: 25 h
+
+
+def _example_ladder(base):
+    import dataclasses
+
+    from examples.pm_instance.specs import daily_traffic, hourly_traffic
+
+    return [dataclasses.replace(s, reprocessing_period_s=10**12)
+            for s in (hourly_traffic(base), daily_traffic(base))]
+
+
+def _load_quarters(spark, raw, hours, calls, job_id):
+    """One cell's four period-END quarter samples of each hour: the
+    closing one lands on the next hour, in the next hour's bucket."""
+    raw.upsert(spark.createDataFrame(
+        [(1, h + 900 * q, calls(h, q), 0, job_id) for h in hours for q in (1, 2, 3, 4)],
+        "entity_id long, epoch long, calls int, drops int, job_id long",
+    ).select("entity_id", F.timestamp_seconds("epoch").alias("ts"),
+             "calls", "drops", "job_id"),
+        keys=["entity_id", "ts"], version_cols=["job_id"], ts_col="ts")
+
+
+def test_daily_ladder_across_dst_days_ticks_only_reached_windows(spark, tmp_path):
+    """Europe/Amsterdam days of 23 h and 25 h, each loaded at its
+    DST-shift hour and its last hour. Each hour dirties only
+    its own hourly window, and each hourly label (period END) only the
+    local day it closes: the last hour's label is the local midnight
+    that ends its day, not the start of the next. A one-hour correction
+    of that last hour re-runs exactly that hour and that day."""
+    hourly, daily = _example_ladder(str(tmp_path))
+    engine = MaterializationEngine(str(tmp_path))
+    assert engine._window_end(daily, SPRING) - SPRING == 23 * 3600
+    assert engine._window_end(daily, FALL) - FALL == 25 * 3600
+    hours = [SPRING + 7200, SPRING_END - 3600, FALL + 10800, FALL_END - 3600]
+    _load_quarters(spark, hourly.sources[0], hours, lambda h, q: 10 ** q, 1)
+    assert engine.tick(spark, hourly, now=4e9) == hours
+    assert engine.tick(spark, daily, now=4e9) == [SPRING, FALL]
+
+    def days():
+        return {r["bucket"]: r["calls"] for r in daily.target.read(spark).collect()}
+
+    assert days() == {SPRING_END: 2 * 11110, FALL_END: 2 * 11110}
+
+    last = SPRING_END - 3600
+    _load_quarters(spark, hourly.sources[0], [last], lambda h, q: 2 * 10 ** q, 2)
+    assert engine.tick(spark, hourly, now=4e9) == [last]
+    assert engine.tick(spark, daily, now=4e9) == [SPRING]
+    assert days() == {SPRING_END: 3 * 11110, FALL_END: 2 * 11110}
+
+
+def test_log_without_spans_keeps_whole_bucket_mapping(tmp_path):
+    """Entries logged before spans were carry none: they dirty every
+    window the whole bucket can reach, with the fingerprints computed
+    before spans (so an existing store re-runs nothing). A span entry
+    added to a shared bucket changes only the windows it reaches."""
+    import hashlib
+
+    import pyarrow as pa
+
+    from minerva_etl_46_spark.sources.paio import append_table
+
+    raw = TrendStorePartStorage(str(tmp_path), "raw_events", partition_size_s=3600)
+    target = TrendStorePartStorage(str(tmp_path), "events_1h", partition_size_s=3600)
+    append_table(raw.modified_log_path, pa.table({
+        "part": [raw.name] * 3, "p_bucket": [H0, H0 + 3600, H0],
+        "modified_at": [5.0, 6.0, 7.0], "job_id": pa.array([None] * 3, pa.int64()),
+    }))
+    engine = MaterializationEngine(str(tmp_path))
+    spec = make_spec(raw, target, closed="end")
+
+    def fp(*parts):
+        return hashlib.md5("|".join(sorted(parts)).encode()).hexdigest()
+
+    old = {H0 - 3600: fp(f"{raw.name}:{H0}:2:7.0"),
+           H0: fp(f"{raw.name}:{H0}:2:7.0", f"{raw.name}:{H0 + 3600}:1:6.0"),
+           H0 + 3600: fp(f"{raw.name}:{H0 + 3600}:1:6.0")}
+    assert dict(engine.candidates(None, spec, now=4e9)) == old
+
+    raw._log_modified({H0: ((H0 + 900) * 10**6, (H0 + 2700) * 10**6)}, job_id=None)
+    new = dict(engine.candidates(None, spec, now=4e9))
+    assert {w for w in old if new[w] != old[w]} == {H0}
+
+
+def test_undeclared_spec_materializes_a_row_on_the_window_start(spark, stores):
+    """A spec that declares no closed end and reads [start, end): a row
+    at ts == w dirties both windows whose closed interval holds it, so
+    the window that reads it runs."""
+    raw, target = stores
+    raw.write(_events_at(spark, [(1, 7, H0, 5.0)]))
+    engine = MaterializationEngine(raw.base_dir)
+    spec = make_spec(raw, target, reprocessing_period_s=10**12)
+    assert engine.tick(spark, spec, now=4e9) == [H0 - 3600, H0]
+    assert [(r["user_id"], r["bucket"], r["sum_value"])
+            for r in target.read(spark).collect()] == [(7, H0, 5.0)]

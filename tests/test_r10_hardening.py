@@ -865,6 +865,35 @@ def test_tune_warns_when_a_correctness_conf_cannot_pin(spark):
     assert not [x for x in w if "correctness conf" in str(x.message)]
 
 
+def test_tune_warns_when_a_correctness_conf_cannot_be_read():
+    """A correctness conf whose value cannot be read back cannot be shown
+    to have taken: tune() warns instead of skipping it."""
+    import warnings
+
+    from minerva_etl_46_spark import session as S
+
+    class FakeConf:
+        def __init__(self):
+            self._d = dict(S.RUNTIME_CONFS)
+
+        def set(self, k, v):
+            self._d[k] = v
+
+        def get(self, k, default=None):
+            if k == "spark.sql.ansi.enabled":
+                raise RuntimeError("conf is not readable here")
+            return self._d.get(k, default)
+
+    class FakeSpark:
+        conf = FakeConf()
+
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        S.tune(FakeSpark())
+    msgs = [str(x.message) for x in w if "correctness conf" in str(x.message)]
+    assert len(msgs) == 1 and "spark.sql.ansi.enabled unreadable" in msgs[0]
+
+
 def test_records_walk_null_value_is_never_a_record():
     """Arrow delivers SQL NULLs as NaN inside the state walk. A NaN
     arriving FIRST used to take the ``max_val is None`` branch: flagged

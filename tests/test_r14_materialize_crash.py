@@ -119,6 +119,42 @@ def test_crash_between_write_and_save_state_converges(spark, tmp_path,
     assert engine.tick(spark, spec, now=FAR + 20) == [], "did not quiesce"
 
 
+def test_crash_in_span_mapped_tick_replays_exactly_the_dirty_window(
+        spark, tmp_path, monkeypatch):
+    """The example ladder declares closed="end", so a one-hour load
+    dirties one hourly window. Kill that tick after the target write,
+    before the fingerprint save: the re-tick runs exactly that window
+    again, and the chained daily step still sees its day dirty."""
+    import dataclasses
+
+    from examples.pm_instance.specs import daily_traffic, hourly_traffic
+
+    hourly, daily = (dataclasses.replace(s(str(tmp_path)), reprocessing_period_s=10**12)
+                     for s in (hourly_traffic, daily_traffic))
+    engine = MaterializationEngine(str(tmp_path))
+    hour = H0 + 5 * 3600
+    hourly.sources[0].upsert(spark.createDataFrame(
+        [(1, hour + 900 * q, q, 0) for q in (1, 2, 3, 4)],
+        "entity_id long, epoch long, calls int, drops int",
+    ).select("entity_id", F.timestamp_seconds("epoch").alias("ts"), "calls", "drops"),
+        keys=["entity_id", "ts"], version_cols=["calls"], ts_col="ts")
+
+    def dying_save(self, sp, state):
+        raise RuntimeError("simulated kill before state save")
+
+    monkeypatch.setattr(MaterializationEngine, "_save_state", dying_save)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        engine.tick(spark, hourly, now=FAR)
+    monkeypatch.undo()
+
+    assert engine.tick(spark, hourly, now=FAR + 10) == [hour]
+    assert engine.tick(spark, hourly, now=FAR + 20) == []
+    day = engine._window_floor(daily, hour + 3600 - 1)
+    assert engine.tick(spark, daily, now=FAR + 30) == [day]
+    assert [(r["bucket"], r["calls"]) for r in daily.target.read(spark).collect()] \
+        == [(engine._window_end(daily, day), 10)]
+
+
 # -------------------------------------------------- (b) mid-rmtree reprocess
 
 

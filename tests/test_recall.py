@@ -110,6 +110,47 @@ def test_lsh_bucket_cap_bounds_template_blowup(spark):
     assert found >= 0.99, f"cap damaged organic candidate recall: {found:.3f}"
 
 
+def _final_plan(df) -> str:
+    """The AQE-final physical plan of ``df`` after one collect."""
+    df.collect()
+    return (df._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0])
+
+
+def test_lsh_bucket_cap_keeps_one_banding(spark):
+    """The bucket cap sizes each (band_id, bh) bucket with a count window
+    over that key, not a join against a grouped copy of the band rows.
+    So the capped AQE-final plans explode shingles and bands (Generate)
+    as often as the uncapped ones, and the symmetric self-join still
+    reads its one band exchange twice (ReusedExchange). Sort-merge joins
+    only: a broadcast side shares no exchange."""
+    from minerva_etl_46_spark.operators.dedup import lsh_candidates_against
+    from scale_probe import synth_docs
+
+    docs = synth_docs(spark, 60)
+    sig = minhash_signature(docs, "doc_id", "text", k=32)
+    batch_sig = minhash_signature(docs.filter(F.col("doc_id") % 10 == 1),
+                                  "doc_id", "text", k=32)
+    builds = {
+        "lsh_candidate_pairs": lambda cap: lsh_candidate_pairs(
+            sig, "doc_id", k=32, bands=16, max_bucket_size=cap),
+        "lsh_candidates_against": lambda cap: lsh_candidates_against(
+            batch_sig, sig, "doc_id", k=32, bands=16, max_bucket_size=cap),
+    }
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        plans = {(name, cap): _final_plan(build(cap))
+                 for name, build in builds.items() for cap in (None, 16)}
+    finally:
+        spark.conf.set(conf, prev)
+    for name in builds:
+        assert (plans[name, 16].count("Generate ")
+                == plans[name, None].count("Generate ")), name
+    assert "ReusedExchange" in plans["lsh_candidate_pairs", 16]
+
+
 def test_sim_ann_recall_floor(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").localCheckpoint(eager=True)
     exact = _pairs(cosine_topk_bruteforce(emb).select("q_id", "c_id").toPandas())
